@@ -6,7 +6,8 @@
   ``collect`` for the action, which in a traced pass also tags the Spark
   jobs with a job group and reads the executed plan's SQL metrics.
 - ``spark_jobs``: job / stage / task counts of a job group from the
-  status tracker, which works with ``spark.ui.enabled=false``.
+  status tracker, which works with ``spark.ui.enabled=false``, read
+  once the listener bus has caught up.
 - ``plan_metrics``: walks an executed plan, descending into AQE query
   stages, and sums the SQL metrics the per-layer ledger needs.
 - ``RssSampler``: peak resident set size of this process and all its
@@ -174,11 +175,24 @@ class Ctx:
             self.trace.count(f"{scope}.tasks", tasks)
 
 
-def spark_jobs(spark, group: str) -> tuple[int, int, int]:
-    st = spark.sparkContext.statusTracker()
+def spark_jobs(spark, group: str, timeout: float = 10.0) -> tuple[int, int, int]:
+    """(jobs, stages run, tasks completed) of a job group. The status
+    tracker is filled from Spark's asynchronous listener bus, so first
+    wait until the bus has delivered every event posted so far and every
+    job of the group reads as finished (a job still being cancelled
+    after the action returned is given up to ``timeout`` seconds)."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    deadline = time.perf_counter() + timeout
+    while True:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(int(timeout * 1000))
+        infos = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        if (all(i is not None and i.status in ("SUCCEEDED", "FAILED") for i in infos)
+                or time.perf_counter() >= deadline):
+            break
+        time.sleep(0.05)
     jobs = stages = tasks = 0
-    for jid in st.getJobIdsForGroup(group):
-        info = st.getJobInfo(jid)
+    for info in infos:
         if info is None:
             continue
         jobs += 1
@@ -222,11 +236,11 @@ def plan_metrics(df) -> dict[str, float]:
     """Sum the ledger's SQL metrics over ``df``'s executed plan (after an
     action has run it). Keys: python_nodes, python_task_s, python_boot_s,
     python_init_s, arrow_mb_sent, arrow_mb_received, shuffle_mb,
-    shuffle_partitions, spill_mb, join_rows."""
+    shuffle_partitions, spill_mb."""
     out = dict.fromkeys(
         ("python_nodes", "python_task_s", "python_boot_s", "python_init_s",
          "arrow_mb_sent", "arrow_mb_received", "shuffle_mb",
-         "shuffle_partitions", "spill_mb", "join_rows"), 0.0)
+         "shuffle_partitions", "spill_mb"), 0.0)
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
@@ -243,8 +257,6 @@ def plan_metrics(df) -> dict[str, float]:
             b = _metric(node, "shuffleBytesWritten")
             out["shuffle_mb"] += (b if b is not None else _metric(node, "dataSize") or 0.0) / 1e6
             out["shuffle_partitions"] += _metric(node, "numPartitions") or 0.0
-        if cls.endswith("JoinExec") or cls == "CartesianProductExec":
-            out["join_rows"] += _metric(node, "numOutputRows") or 0.0
         out["spill_mb"] += (_metric(node, "spillSize") or 0.0) / 1e6
         stack.extend(_children(node))
     return out

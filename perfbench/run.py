@@ -222,9 +222,6 @@ def measure(args, tmp: str) -> dict:
         e["mcells_per_s"] = w["mcells"] * len(pass_times) / sum(pass_times)
     if "docs" in w:
         e["docs_per_s"] = w["docs"] * len(pass_times) / sum(pass_times)
-    for key, op in (("read_mb", "read"), ("write_mb", "write")):
-        if key in w:
-            e[f"{key}_per_s"] = w[key] / out["op_s"][op]
     e["failed_frac"] = tally.failed / max(1, tally.attempted)
     if args.trace:
         out["layers"] = per_layer(trace, traced, untraced, warm, ops, probes,
@@ -324,7 +321,6 @@ def main(argv=None) -> int:
 # Printed for the workloads they apply to; not in BENCHMARK.json, whose
 # end-to-end metrics exist on every workload and are never 0.
 EXTRA_UNITS = {"mcells_per_s": "Mcells/s", "docs_per_s": "docs/s",
-               "read_mb_per_s": "MB/s", "write_mb_per_s": "MB/s",
                "failed_frac": "frac"}
 
 

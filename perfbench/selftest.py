@@ -73,13 +73,9 @@ class Pure(unittest.TestCase):
                 w = [int(a[i, j]) for i in range(max(0, r - 1), min(3, r + 2))
                      for j in range(max(0, c - 1), min(3, c + 2)) if a[i, j] != 0]
                 self.assertAlmostEqual(got[r, c], sum(w) / len(w))
-
-    def test_ray_casting(self):
-        from perfbench.workloads.spatial_join import _in_ring
-
-        px, py = np.array([0.5, 1.5, 0.9]), np.array([0.5, 0.5, 0.1])
-        xs, ys = np.array([0.0, 1.0, 1.0, 0.0]), np.array([0.0, 0.0, 1.0, 1.0])
-        self.assertEqual(_in_ring(px, py, xs, ys).tolist(), [True, False, True])
+        # a stack of tiles gives each tile's own result
+        np.testing.assert_array_equal(_focal_mean_3x3(np.stack([a, a[::-1]]))[1],
+                                      _focal_mean_3x3(a[::-1]))
 
     def test_jaccard(self):
         from perfbench.workloads.doc_dedup import jaccard

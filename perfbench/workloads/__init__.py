@@ -109,9 +109,8 @@ def floor_seconds(ctx, df, column: str, return_type: str) -> float:
         return median_seconds(q.collect)
 
 
-# raster and doc_dedup are the benchmark's workloads (BENCHMARK.json);
-# raster's three parts also run on their own.
-NAMES = ("raster", "doc_dedup", "tile_algebra", "spatial_join", "ingest_write")
+# the benchmark's workloads (BENCHMARK.json)
+NAMES = ("raster", "doc_dedup")
 
 
 def load(name: str) -> type:

@@ -1,10 +1,12 @@
-"""ingest_write: GeoTIFF scenes in, GeoTIFF tiles out.
+"""The ingest part of the raster workload: GeoTIFF scenes in, GeoTIFF
+tiles out.
 
-Set-up writes seeded DEFLATE GeoTIFF scenes with NoData. The read op
-reads them with ``read_raster``, realizes the tiles and computes
-``rf_local_add`` plus per-tile stats; the write op writes that result
-with ``write_tiles`` and reads every file back bit for bit. Nothing is
-Spark-cached: every pass reads the files again.
+Set-up writes seeded DEFLATE GeoTIFF scenes with NoData. The one op
+reads them with ``read_raster``, realizes the tiles, computes
+``rf_local_add`` and writes the result with ``write_tiles``; its check
+reads every written file back bit for bit. Nothing is Spark-cached:
+every pass reads the scenes again, and a read gain that costs the write
+path shows in the same op.
 """
 
 from __future__ import annotations
@@ -14,11 +16,10 @@ import shutil
 
 import numpy as np
 
-from perfbench.workloads import (
-    Op, Workload, first_mismatch, rng_for, time_mb_per_s, uint16_band)
+from perfbench.workloads import Op, Workload, rng_for, time_mb_per_s, uint16_band
 
 # (scenes, scene side, chunk side)
-SIZES = {"full": (2, 512, 256), "smoke": (2, 64, 32)}
+SIZES = {"full": (4, 512, 256), "smoke": (2, 64, 32)}
 CRS = "EPSG:32617"
 RES = 30.0        # metres per pixel
 X0, Y0 = 500000.0, 4000000.0   # scene k's west edge is X0 + k * side * RES
@@ -26,8 +27,6 @@ ADD = 7           # constant the local op adds
 
 
 class IngestWrite(Workload):
-    name = "ingest_write"
-
     def __init__(self, spark, seed, size, tmp):
         import rasterframes_spark as rf
         from rasterframes_spark.sources import geotiff as GT
@@ -53,16 +52,10 @@ class IngestWrite(Workload):
             self.paths.append(p)
         self.ymax = Y0 + side * RES
         self.side = side
-        self.want_read = {}
-        for k, a in enumerate(self.scenes):
-            for r0 in range(0, side, self.chunk):
-                for c0 in range(0, side, self.chunk):
-                    c = a[r0:r0 + self.chunk, c0:c0 + self.chunk].astype(np.int64)
-                    self.want_read[(k, c0, r0)] = (int((c[c != 0] + ADD).sum()),
-                                                   int((c != 0).sum()))
-        self.work = {"scenes": ns, "tiles": len(self.want_read),
-                     "mcells": 2 * ns * side * side / 1e6,
-                     "read_mb": nbytes / 1e6, "input_mb": 2 * nbytes / 1e6}
+        self.chunks = {(k, c0, r0) for k in range(ns)
+                       for r0 in range(0, side, self.chunk) for c0 in range(0, side, self.chunk)}
+        self.work = {"scenes": ns, "scene_tiles": len(self.chunks),
+                     "mcells": ns * side * side / 1e6, "input_mb": nbytes / 1e6}
         self._files = 0
 
     def _key(self, xmin, ymax):
@@ -82,24 +75,12 @@ class IngestWrite(Workload):
             rf.sources.realize_tiles(F.col("tile_ref")), ADD).alias("tile"))
 
     def ops(self):
-        rf = self.rf
-
-        def read(ctx):
-            with ctx.span("read_raster"):
-                t = self._tiles()
-                q = t.select("extent", rf.rf_tile_sum("tile").alias("s"),
-                             rf.rf_data_cells("tile").alias("n"))
-            return {self._key(r["extent"]["xmin"], r["extent"]["ymax"]):
-                    (int(r["s"] or 0), int(r["n"])) for r in ctx.collect(q)}
-
-        def write(ctx):
+        def ingest(ctx):
             shutil.rmtree(self.out_dir, ignore_errors=True)
-            with ctx.span("write_tiles"):
-                return rf.sources.write_tiles(self._tiles(), self.out_dir)
+            with ctx.span("read_raster.write_tiles"):
+                return self.rf.sources.write_tiles(self._tiles(), self.out_dir)
 
-        return [Op("read", "sources", read,
-                   lambda got: first_mismatch(got, self.want_read)),
-                Op("write", "sources", write, self._check_written)]
+        return [Op("ingest", "sources", ingest, self._check_written)]
 
     def _check_written(self, catalog: str) -> str | None:
         """Every written file decodes to the expected chunk plus ADD, bit
@@ -108,13 +89,11 @@ class IngestWrite(Workload):
 
         with open(catalog) as f:
             rows = list(csv.DictReader(f))
-        seen, nbytes = set(), 0
+        seen = set()
         for r in rows:
             key = self._key(float(r["xmin"]), float(r["ymax"]))
             with open(r["path"], "rb") as f:
-                data = f.read()
-            nbytes += len(data)
-            arr, info = self.GT.read_full(data)
+                arr, info = self.GT.read_full(f.read())
             k, c0, r0 = key
             src = self.scenes[k][r0:r0 + self.chunk, c0:c0 + self.chunk]
             d = src != 0
@@ -126,10 +105,9 @@ class IngestWrite(Workload):
                     or not np.array_equal(arr[d], src[d].astype(np.int64) + ADD)):
                 return f"file {os.path.basename(r['path'])} differs from chunk {key}"
             seen.add(key)
-        if seen != set(self.want_read):
-            return f"{len(seen)} chunks written, want {len(self.want_read)}"
+        if seen != self.chunks:
+            return f"{len(seen)} chunks written, want {len(self.chunks)}"
         self._files = len(rows)
-        self.work["write_mb"] = nbytes / 1e6
         shutil.rmtree(self.out_dir, ignore_errors=True)
         return None
 

@@ -1,25 +1,22 @@
-"""raster: tile_algebra, spatial_join (without st_join) and ingest_write
-in one pass.
+"""raster: map algebra, raster and zonal joins, and GeoTIFF ingest in one
+pass.
 
-The three raster workloads each pay a Spark session start and a warm
-pass per run; run one after another in one process they fit the
-benchmark's time budget. Their ops keep their own names, so the per-op
-and per-layer figures still separate the kernels and functions
-(tile_algebra), the operators and geometry (spatial_join) and the
-GeoTIFF sources (ingest_write). ``st_join`` runs only in the standalone
-spatial_join workload: with it the benchmark's runs overran their time
-budget.
+The three parts would each pay a Spark session start and a warm pass if
+they ran as separate workloads; in one process they fit the benchmark's
+time budget. Their ops keep their own names and layers, so the per-op and
+per-layer figures still separate the kernels and tile functions
+(``TileAlgebra``), the operators and geometry (``SpatialJoin``) and the
+GeoTIFF sources (``IngestWrite``).
 """
 
 from __future__ import annotations
 
-from perfbench.workloads import Workload
+from perfbench.workloads import Workload, floor_seconds
 from perfbench.workloads.ingest_write import IngestWrite
 from perfbench.workloads.spatial_join import SpatialJoin
 from perfbench.workloads.tile_algebra import TileAlgebra
 
 PARTS = (TileAlgebra, SpatialJoin, IngestWrite)
-LEFT_OUT = {"st_join"}
 
 
 class Raster(Workload):
@@ -37,14 +34,12 @@ class Raster(Workload):
         return out
 
     def ops(self):
-        return [op for p in self.parts for op in p.ops() if op.name not in LEFT_OUT]
+        return [op for p in self.parts for op in p.ops()]
 
     def stats(self):
         return {k: v for p in self.parts for k, v in p.stats().items()}
 
     def probes(self, ctx):
-        out = {}
-        for p in self.parts:
-            for k, v in p.probes(ctx).items():
-                out.setdefault(k, v)   # kernel.floor_s: tile_algebra's layer
+        out = {k: v for p in self.parts for k, v in p.probes(ctx).items()}
+        out["kernel.floor_s"] = floor_seconds(ctx, self.parts[0].df, "red.cells", "binary")
         return out

@@ -1,11 +1,10 @@
-"""spatial_join: raster and vector joins.
+"""The spatial-join part of the raster workload.
 
 - ``raster_join`` of a lon/lat layer (EPSG:4326) with a layer stored in
   Web Mercator (EPSG:3857) whose tile grid is shifted half a tile east, so
   extent reprojection runs and every left tile merges two or more right
   tiles.
 - ``zonal_stats`` over rectangle zones whose edges lie on pixel edges.
-- ``st_join`` of seeded points against seeded star-shaped polygons.
 
 Operators, geometry and the shuffle do the work; the kernels stay light
 (``rf_tile_sum``).
@@ -14,16 +13,15 @@ Operators, geometry and the shuffle do the work; the kernels stay light
 from __future__ import annotations
 
 import math
-from functools import cached_property
 
 import numpy as np
 
 from perfbench.workloads import (
-    EXTENT_T, TILE_T, Op, Workload, first_mismatch, floor_seconds, median_seconds,
-    rng_for, uint16_band)
+    EXTENT_T, TILE_T, Op, Workload, first_mismatch, median_seconds, rng_for,
+    uint16_band)
 
-# (left tiles across, down, tile side, zones, points, polygons)
-SIZES = {"full": (3, 2, 128, 12, 4000, 30), "smoke": (2, 2, 16, 4, 200, 6)}
+# (left tiles across, down, tile side, zones)
+SIZES = {"full": (4, 2, 256, 12), "smoke": (2, 2, 16, 4)}
 CT = "uint16ud0"
 LON0 = 10.0           # west edge of the left layer, degrees
 R = 6378137.0         # spherical Mercator radius
@@ -41,28 +39,13 @@ def _wkt_polygon(xs, ys) -> str:
     return f"POLYGON (({pts}))"
 
 
-def _in_ring(px, py, xs, ys) -> np.ndarray:
-    """Even-odd ray casting of points against one closed ring."""
-    inside = np.zeros(px.shape, bool)
-    n = len(xs)
-    for i in range(n):
-        x1, y1, x2, y2 = xs[i], ys[i], xs[(i + 1) % n], ys[(i + 1) % n]
-        crosses = (y1 > py) != (y2 > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-        inside ^= crosses & (px < xint)
-    return inside
-
-
 class SpatialJoin(Workload):
-    name = "spatial_join"
-
     def __init__(self, spark, seed, size, tmp):
         import rasterframes_spark as rf
         from rasterframes_spark.tile import Tile
 
-        self.rf, self.spark = rf, spark
-        gw, gh, t, nz, npts, npoly = SIZES[size]
+        self.rf, self.spark, self.seed = rf, spark, seed
+        gw, gh, t, nz = SIZES[size]
         self.gw, self.gh, self.t = gw, gh, t
         rng = rng_for(seed, 2)
         cpus = spark.sparkContext.defaultParallelism
@@ -107,47 +90,22 @@ class SpatialJoin(Workload):
             w, h = min(w, W), min(h, H)
             c0, r0 = int(rng.integers(0, W - w + 1)), int(rng.integers(0, H - h + 1))
             self.zones.append((z, c0, r0, w, h))
-        zrows = []
+        self.zone_wkt = []
         for z, c0, r0, w, h in self.zones:
             x0, x1 = LON0 + c0 / t, LON0 + (c0 + w) / t
             y1, y0 = gh - r0 / t, gh - (r0 + h) / t   # row 0 is the north edge
-            zrows.append((z, _wkt_polygon([x0, x1, x1, x0], [y0, y0, y1, y1])))
-        self.zones_df = spark.createDataFrame(zrows, "zone_id int, wkt string").select(
+            self.zone_wkt.append((z, _wkt_polygon([x0, x1, x1, x0], [y0, y0, y1, y1])))
+        self.zones_df = spark.createDataFrame(self.zone_wkt, "zone_id int, wkt string").select(
             "zone_id", rf.st_geom_from_wkt("wkt").alias("geom")).cache()
 
-        # points and star-shaped polygons over the same area
-        self.px = LON0 + rng.random(npts) * gw
-        self.py = rng.random(npts) * gh
-        self.polys = []
-        for k in range(npoly):
-            cx, cy = LON0 + rng.random() * gw, rng.random() * gh
-            nv = int(rng.integers(5, 9))
-            ang = np.sort(rng.random(nv)) * 2 * np.pi
-            rad = 0.1 + rng.random(nv) * 0.5
-            self.polys.append((k, cx + rad * np.cos(ang), cy + rad * np.sin(ang)))
         for df in (self.left_df, self.right_df, self.zones_df):
             df.count()
 
         cells = (len(self.left) + len(self.right)) * t * t
         self.work = {"left_tiles": len(self.left), "right_tiles": len(self.right),
-                     "mcells": cells / 1e6, "zones": nz, "points": npts, "polygons": npoly,
+                     "mcells": cells / 1e6, "zones": nz,
                      "input_mb": cells * 2 / 1e6}
         self._oracle()
-        self._pairs = 0         # pairs the last st_join op returned
-
-    @cached_property
-    def st_join_inputs(self):
-        """Points and polygon frames, built on the first st_join call (the
-        raster workload leaves st_join out and never pays for them)."""
-        rf, spark = self.rf, self.spark
-        pts = spark.createDataFrame(
-            list(zip(range(len(self.px)), self.px.tolist(), self.py.tolist())),
-            "pid int, x double, y double").repartition(spark.sparkContext.defaultParallelism)
-        pts = pts.select("pid", rf.st_point("x", "y").alias("geometry")).cache()
-        polys = spark.createDataFrame(
-            [(k, _wkt_polygon(xs, ys)) for k, xs, ys in self.polys], "zid int, wkt string"
-        ).select("zid", rf.st_geom_from_wkt("wkt").alias("geometry")).cache()
-        return pts, polys
 
     # -- oracles ------------------------------------------------------
     def _oracle(self):
@@ -181,14 +139,6 @@ class SpatialJoin(Workload):
         for z, c0, r0, w, h in self.zones:
             sl = mosaic[r0:r0 + h, c0:c0 + w]
             self.want_zonal[z] = (int(sl.sum()), int((sl != 0).sum()))
-        # st_join: ray casting per polygon over points in its bounding box
-        pairs = set()
-        for k, xs, ys in self.polys:
-            sel = np.nonzero((self.px >= xs.min()) & (self.px <= xs.max())
-                             & (self.py >= ys.min()) & (self.py <= ys.max()))[0]
-            hit = _in_ring(self.px[sel], self.py[sel], xs, ys)
-            pairs.update((int(p), k) for p in sel[hit])
-        self.want_pairs = pairs
 
     def _sample(self, fc, fr):
         """Right-mosaic value at fractional global pixel coords, and the
@@ -223,17 +173,8 @@ class SpatialJoin(Workload):
                 return f"tile {k}: sum/cells {gs}/{gn} want {s}/{n}"
         return None
 
-    def _check_pairs(self, got):
-        self._pairs = len(got)
-        if got == self.want_pairs:
-            return None
-        return (f"{len(got)} pairs want {len(self.want_pairs)}; e.g. missing "
-                f"{sorted(self.want_pairs - got)[:3]} extra {sorted(got - self.want_pairs)[:3]}")
-
     # -- op mix ---------------------------------------------------------
     def ops(self):
-        from pyspark.sql import functions as F
-
         rf = self.rf
 
         def raster_join(ctx):
@@ -252,17 +193,10 @@ class SpatialJoin(Workload):
             return {r["zone_id"]: (int(r["sum"] or 0), int(r["data_cells"]))
                     for r in ctx.collect(q)}
 
-        def st_join(ctx):
-            pts, polys = self.st_join_inputs
-            with ctx.span("st_join"):
-                q = rf.st_join(pts, polys).select("pid", "zid")
-            return {(r["pid"], r["zid"]) for r in ctx.collect(q)}
-
         return [
             Op("raster_join", "operators", raster_join, self._check_rj),
             Op("zonal_stats", "operators", zonal,
                lambda got: first_mismatch(got, self.want_zonal)),
-            Op("st_join", "operators", st_join, self._check_pairs),
         ]
 
     def probes(self, ctx):
@@ -279,8 +213,11 @@ class SpatialJoin(Workload):
         with ctx.trace.span("geom.reproject", "geom"):
             reproject = median_seconds(lambda: P.transform_points(
                 lon.ravel(), lat.ravel(), "EPSG:4326", "EPSG:3857"))
-        polys = [G.wkt_loads(_wkt_polygon(xs, ys)) for _, xs, ys in self.polys]
-        pts = [G.wkt_loads(f"POINT ({x!r} {y!r})") for x, y in zip(self.px[:2000], self.py[:2000])]
+        # point-in-zone tests: every zone against 2000 seeded points
+        polys = [G.wkt_loads(w) for _, w in self.zone_wkt]
+        rng = rng_for(self.seed, 5)
+        pts = [G.wkt_loads(f"POINT ({x!r} {y!r})")
+               for x, y in zip(LON0 + rng.random(2000) * self.gw, rng.random(2000) * self.gh)]
         with ctx.trace.span("geom.intersects", "geom"):
             intersects = median_seconds(
                 lambda: [G.intersects(p, g) for g in polys for p in pts], reps=1)
@@ -290,9 +227,5 @@ class SpatialJoin(Workload):
         q = q.select(F.sum(F.length("tile.cells")))
         with ctx.trace.span("operators.shuffle_floor", "spark"):
             floor = median_seconds(q.collect)
-        cand = float(ctx.trace.counters.get((0, "op.st_join.join_rows"), 0.0))
         return {"geom.reproject_s": reproject, "geom.intersects_s": intersects,
-                "kernel.floor_s": floor_seconds(ctx, self.left_df, "tile.cells", "binary"),
-                "operators.shuffle_floor_s": floor,
-                "operators.candidate_rows": cand,
-                "operators.pair_yield": self._pairs / cand if cand else 0.0}
+                "operators.shuffle_floor_s": floor}
