@@ -48,18 +48,34 @@ def col_or_name(c) -> Column:
 def lazy_pandas_udf(return_type):
     """Defer pandas_udf creation until first call — DDL-string return types
     need an active SparkSession to parse, and this package must be importable
-    without one (driver imports __spark_entry__ before building the session)."""
+    without one (driver imports __spark_entry__ before building the session).
+
+    ``.once`` on the returned callable is the same kernel (same name in
+    the plan, bit-identical values) marked nondeterministic — the
+    single-eval form.  Use it where a column computed by the kernel is
+    then filtered on, or equi-joined on, and also carried downstream:
+    Catalyst otherwise pushes the filter (or the join's inferred
+    ``isnotnull``) below the projection and DUPLICATES the Python eval,
+    so every row crosses Arrow and runs the kernel twice.  The cost: a
+    nondeterministic projection is a pushdown barrier — no filter above
+    it, not even one on an unrelated column, moves below it or into the
+    scan, and rows the filter drops still pay the kernel once.  Use the
+    plain call everywhere else."""
     import functools
 
     def deco(fn):
         holder: dict = {}
 
-        @functools.wraps(fn)
-        def call(*cols):
-            if "udf" not in holder:
-                holder["udf"] = pandas_udf(return_type)(fn)
-            return holder["udf"](*cols)
+        def make(key, build):
+            def call(*cols):
+                if key not in holder:
+                    holder[key] = build()
+                return holder[key](*cols)
+            return functools.wraps(fn)(call)
 
+        call = make("udf", lambda: pandas_udf(return_type)(fn))
+        call.once = make("once", lambda: pandas_udf(return_type)(
+            fn).asNondeterministic())
         call.fn = fn
         call.returnType = return_type
         return call

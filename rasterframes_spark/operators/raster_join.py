@@ -24,6 +24,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from rasterframes_spark.tile import CellType, Tile, TILE_SCHEMA
+from rasterframes_spark._plan import (
+    NARROW_NODES, RELATION_LEAVES, _plan_size_bytes, optimized_plan,
+    plan_leaves)
 from rasterframes_spark.functions._kernel import lazy_pandas_udf
 from rasterframes_spark.geom import proj as P
 from rasterframes_spark.geom.functions import rf_spatial_grid_cells
@@ -43,29 +46,6 @@ def _extent_to_4326_udf(e: pd.DataFrame, crs: pd.Series) -> pd.DataFrame:
                 (float(xm[i]), float(ym[i]), float(xM[i]), float(yM[i])),
                 str(crs.values[i]), "EPSG:4326"))
     return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
-
-
-_extent_once_holder: dict = {}
-
-
-def _extent_to_4326_once(e, crs):
-    """``_extent_to_4326_udf`` marked nondeterministic — the §4.4
-    single-eval shape (r15; same pattern as geom/functions
-    ``_envelope_once``): the pair join's bbox-overlap condition lets
-    Catalyst INFER ``isnotnull`` constraints on the projected __e4326
-    fields and push them below the projection, duplicating the
-    reprojection UDF — each side paid the Arrow crossing + pyproj
-    transform twice per row (plan-verified: 2 ArrowEvalPython sites per
-    side).  Same kernel, bit-identical values; rows with null extents
-    are dropped by the downstream cell-explode/overlap condition either
-    way."""
-    if "udf" not in _extent_once_holder:
-        from pyspark.sql.functions import pandas_udf
-
-        _extent_once_holder["udf"] = pandas_udf(
-            "struct<xmin:double,ymin:double,xmax:double,ymax:double>")(
-            _extent_to_4326_udf.fn).asNondeterministic()
-    return _extent_once_holder["udf"](e, crs)
 
 
 def _merge_kernel(resampling: str):
@@ -186,28 +166,6 @@ _MERGE_MAX_PARTITIONS = 4096
 _PLAN_STAT_INFLATION = 4.0
 
 
-def _plan_size_bytes(df) -> float | None:
-    """Catalyst's estimated sizeInBytes of the optimized logical plan —
-    driver-side only, NO Spark jobs.  Accurate for materialized caches,
-    localCheckpoints and file scans (file bytes); unknown sources
-    default to Long.MaxValue, which callers must treat as 'huge'."""
-    try:
-        return float(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — estimate only; None = unknown
-        return None
-
-
-_STAT_TRUSTED_NODES = frozenset({
-    "Project", "Filter", "SubqueryAlias", "Repartition",
-    "RepartitionByExpression", "Sort", "InMemoryRelation",
-    "LocalRelation", "LogicalRelation", "Relation"})
-# LogicalRDD is deliberately NOT trusted: a localCheckpoint inherits its
-# ORIGIN plan's stats, so a checkpointed UDF-generated tile frame reads
-# ~1000x under its real payload (measured: 1.6 KB stat for a 1.6 MB
-# mapInPandas payload), and createDataFrame frames read Long.MaxValue.
-
-
 def _stat_trustworthy(df) -> bool:
     """True when Catalyst's sizeInBytes for this plan prices the bytes
     that actually flow: materialized caches (exact), file scans (file
@@ -220,16 +178,16 @@ def _stat_trustworthy(df) -> bool:
     InMemoryRelation counts only once materialized — before that its
     stats are the (possibly opaque) child's."""
     try:
-        def walk(jp):
-            name = jp.nodeName()
-            if name not in _STAT_TRUSTED_NODES:
-                return False
-            if name == "InMemoryRelation":
-                return bool(
-                    jp.cacheBuilder().isCachedColumnBuffersLoaded())
-            ch = jp.children()
-            return all(walk(ch.apply(i)) for i in range(ch.size()))
-        return walk(df._jdf.queryExecution().optimizedPlan())
+        # LogicalRDD is deliberately NOT a trusted leaf: a
+        # localCheckpoint inherits its ORIGIN plan's stats, so a
+        # checkpointed UDF-generated tile frame reads ~1000x under its
+        # real payload (measured: 1.6 KB stat for a 1.6 MB mapInPandas
+        # payload), and createDataFrame frames read Long.MaxValue.
+        leaves = plan_leaves(optimized_plan(df), NARROW_NODES,
+                             RELATION_LEAVES)
+        return leaves is not None and all(
+            n.cacheBuilder().isCachedColumnBuffersLoaded()
+            for n in leaves if n.nodeName() == "InMemoryRelation")
     except Exception:  # noqa: BLE001 — unknown shape = untrusted
         return False
 
@@ -473,16 +431,16 @@ def raster_join(
         L = L.persist()
         R = R.persist()
 
-    # _extent_to_4326_once, not the raw UDF (r15, §4.4): the overlap
-    # condition's inferred isnotnull constraints otherwise push below
-    # these projections and duplicate the reprojection eval per side
+    # .once: the overlap condition's inferred isnotnull constraints
+    # otherwise push below these projections and duplicate the
+    # reprojection eval per side
     l4326 = L.select(
         "__lid", "__lid2",
-        _extent_to_4326_once(F.col(left_extent), F.col(left_crs)).alias("__e4326"),
+        _extent_to_4326_udf.once(F.col(left_extent), F.col(left_crs)).alias("__e4326"),
     )
     r4326 = R.select(
         "__rid", "__rid2",
-        _extent_to_4326_once(F.col(right_extent), F.col(right_crs)).alias("__e4326"),
+        _extent_to_4326_udf.once(F.col(right_extent), F.col(right_crs)).alias("__e4326"),
     )
 
     if cell_size_deg is None:

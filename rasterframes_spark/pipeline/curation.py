@@ -62,18 +62,17 @@ def dedup_against_minhash(new: DataFrame, reference: DataFrame,
     Filter ``new`` with a left-anti join on the returned new_id to drop
     near-dups of the reference corpus."""
     from rasterframes_spark.pipeline.dedup import (
-        minhash_signature_text, text_jaccard)
+        _minhash_text_kernel, _text_jaccard_kernel)
 
     def banded(df, tag):
-        # _once on both kernels here and in the verify below: the §4.4
+        # .once on both kernels here and in the verify below: the
         # single-eval shape (see minhash_dedup_pairs — same duplicated-
         # filter-pushdown mechanism, plan-asserted in tests)
         sig = df.select(
             F.col(id_col).alias(f"{tag}_id"),
             F.col(text_col).alias(f"__t_{tag}"),
-            minhash_signature_text(text_col, shingle_size, num_perm,
-                                   _once=True)
-            .alias("__sig"),
+            _minhash_text_kernel(shingle_size, num_perm)
+            .once(F.col(text_col)).alias("__sig"),
         ).where(F.col("__sig").isNotNull())
         rows_per_band = F.floor(F.size("__sig") / bands).cast("int")
         return sig.select(
@@ -95,8 +94,8 @@ def dedup_against_minhash(new: DataFrame, reference: DataFrame,
              .dropDuplicates(["new_id", "ref_id"]))
     return (cands.select(
         "new_id", "ref_id",
-        F.round(text_jaccard("__t_new", "__t_ref", shingle_size,
-                             _once=True), 6)
+        F.round(_text_jaccard_kernel(shingle_size)
+                .once(F.col("__t_new"), F.col("__t_ref")), 6)
         .alias("jaccard"))
         .where(F.col("jaccard") >= threshold))
 

@@ -86,22 +86,19 @@ def shingles(text, n: int = 3) -> Column:
     return F.when(k > 0, F.array_distinct(g)).otherwise(F.array())
 
 
-def text_jaccard(text_a, text_b, shingle_size: int = 3, *,
-                 _once: bool = False) -> Column:
+def text_jaccard(text_a, text_b, shingle_size: int = 3) -> Column:
     """Exact word-n-gram Jaccard of two TEXT columns in one Arrow crossing
     (python set ops per row). Catalyst HOF shingling costs ~1 ms/row
     interpreted — fine corpus-wide once, but the dedup verify step
     evaluates FOUR shingle expressions per candidate pair; this fused
     kernel is ~50x cheaper there. Set semantics identical to
-    jaccard_sim(shingles(a), shingles(b)).
+    jaccard_sim(shingles(a), shingles(b))."""
+    ca = F.col(text_a) if isinstance(text_a, str) else text_a
+    cb = F.col(text_b) if isinstance(text_b, str) else text_b
+    return _text_jaccard_kernel(shingle_size)(ca, cb)
 
-    ``_once`` (internal): mark the UDF nondeterministic — the §4.4
-    single-eval shape for callers that both FILTER on the result and
-    emit it (a threshold filter on a deterministic-UDF column is pushed
-    below the projection and the optimizer DUPLICATES the eval: two
-    Arrow crossings of both full texts per candidate pair, plan-
-    verified).  The kernel is unchanged, so values are bit-identical;
-    the flag only removes the optimizer's licence to duplicate/reorder."""
+
+def _text_jaccard_kernel(shingle_size: int):
     n = int(shingle_size)
 
     @lazy_pandas_udf("double")
@@ -121,13 +118,7 @@ def text_jaccard(text_a, text_b, shingle_size: int = 3, *,
             out[i] = (len(sx & sy) / u) if u else 0.0
         return pd.Series(out)
 
-    ca = F.col(text_a) if isinstance(text_a, str) else text_a
-    cb = F.col(text_b) if isinstance(text_b, str) else text_b
-    if _once:
-        from pyspark.sql.functions import pandas_udf
-
-        return pandas_udf("double")(udf.fn).asNondeterministic()(ca, cb)
-    return udf(ca, cb)
+    return udf
 
 
 def jaccard_sim(a, b) -> Column:
@@ -197,25 +188,18 @@ def minhash_signature(shingles_col, num_perm: int = 64, seed: int = 42) -> Colum
 
 
 def minhash_signature_text(text_col, shingle_size: int = 3,
-                           num_perm: int = 64, seed: int = 42, *,
-                           _once: bool = False) -> Column:
+                           num_perm: int = 64, seed: int = 42) -> Column:
     """Fused text -> shingle -> minhash in ONE Arrow crossing of the raw
     text. Skips the interpreted Catalyst HOF shingling AND the transfer of
     shingle arrays (~3x the text bytes) — the cold-path win for
     minhash_dedup_pairs. Shingle semantics identical to ``shingles()``
     (split on single space, word n-grams, set semantics; minhash is
     order-insensitive so distinct order never matters). NULL for docs with
-    fewer than ``shingle_size`` tokens.
+    fewer than ``shingle_size`` tokens."""
+    return _minhash_text_kernel(shingle_size, num_perm, seed)(text_col)
 
-    ``_once`` (internal): nondeterministic marking for the §4.4
-    single-eval shape — pipelines that project the signature and then
-    filter ``isNotNull()`` on it had the filter pushed below BOTH the
-    projection and the spread Exchange, so the fused kernel ran TWICE
-    over the whole corpus per cold call, the duplicate at pre-spread
-    (often single-task) parallelism (plan-verified).  Same kernel,
-    bit-identical values; short-doc null-signature rows now cross the
-    spread shuffle before being filtered — a few extra narrow rows vs
-    a full duplicated corpus pass."""
+
+def _minhash_text_kernel(shingle_size: int, num_perm: int, seed: int = 42):
     a, b = _hash_params(num_perm, seed)
     n = int(shingle_size)
 
@@ -235,12 +219,7 @@ def minhash_signature_text(text_col, shingle_size: int = 3,
             lists.append(ss)
         return _minhash_from_lists(lists, nz, len(vals), a, b)
 
-    if _once:
-        from pyspark.sql.functions import pandas_udf
-
-        return pandas_udf("array<long>")(udf.fn).asNondeterministic()(
-            text_col)
-    return udf(text_col)
+    return udf
 
 
 
@@ -403,13 +382,14 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     # Gopher upstream, where those passes were the cell's dominant
     # cost).  Text in the cache trades memory for passes; it spills to
     # disk gracefully and releases with release_cache(result).
-    # _once: without it the isNotNull filter below is pushed under the
+    # .once: without it the isNotNull filter below is pushed under the
     # projection AND the spread Exchange, running the fused signature
     # kernel TWICE over the corpus per cold call — the duplicate at
-    # pre-spread parallelism (r15, §4.4; plan-asserted by
-    # test_minhash_pipeline_single_kernel_evals)
-    sigs = src.select("__id", "__txt", minhash_signature_text(
-        "__txt", shingle_size, num_perm, _once=True).alias("minhash"))
+    # pre-spread parallelism (plan-asserted by
+    # test_minhash_pipeline_single_kernel_evals); short-doc
+    # null-signature rows cross the spread shuffle before the filter
+    sigs = src.select("__id", "__txt", _minhash_text_kernel(
+        shingle_size, num_perm).once(F.col("__txt")).alias("minhash"))
     sigs = sigs.where(F.col("minhash").isNotNull())
     sigs.cache()
     n_docs = input_rows
@@ -438,13 +418,14 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     # read the CACHED frame (zero upstream recompute)
     sa = sigs.select(F.col("__id").alias("id_a"), F.col("__txt").alias("__ta"))
     sb = sigs.select(F.col("__id").alias("id_b"), F.col("__txt").alias("__tb"))
-    # _once: the threshold filter on the jaccard column otherwise
+    # .once: the threshold filter on the jaccard column otherwise
     # duplicates the fused verify kernel — two Arrow crossings of both
-    # full texts per candidate pair (r15, §4.4)
+    # full texts per candidate pair
     verified = (
         cands.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", F.round(text_jaccard(
-            "__ta", "__tb", shingle_size, _once=True), 6).alias("jaccard"))
+        .select("id_a", "id_b", F.round(_text_jaccard_kernel(
+            shingle_size).once(F.col("__ta"), F.col("__tb")), 6)
+            .alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
     # cached-signature handle: release with
@@ -784,18 +765,13 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str = "embedding",
             cs[nz] = sims[np.arange(len(nz)), best]
         return pd.DataFrame({"l": ls, "c": cs})
 
-    # nondeterministic marking (r15, §4.4): the `sem_list >= 0` filter
-    # below is otherwise pushed under this projection and the optimizer
-    # duplicates the eval — the centroid-assignment matmul ran TWICE
-    # over the whole corpus (plan-verified: ArrowEvalPython above AND
-    # below the pushed filter).  Same kernel, bit-identical values.
-    from pyspark.sql.functions import pandas_udf as _pudf
-
-    assign_once = _pudf("struct<l:int,c:double>")(
-        assign.fn).asNondeterministic()
+    # .once: the `sem_list >= 0` filter below is otherwise pushed under
+    # this projection and the optimizer duplicates the eval — the
+    # centroid-assignment matmul ran TWICE over the whole corpus
+    # (plan-verified: ArrowEvalPython above AND below the pushed filter)
     base = df.select(F.col(id_col).alias("__sid"),
                      F.col(vec_col).alias("__sv"),
-                     assign_once(F.col(vec_col)).alias("__a"))
+                     assign.once(F.col(vec_col)).alias("__a"))
     base = base.select(
         "__sid", "__sv", F.col("__a.l").alias("sem_list"),
         F.round(F.col("__a.c"), 9).alias("cent_cos"),

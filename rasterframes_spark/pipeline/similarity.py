@@ -211,22 +211,21 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
 
 def hyperplane_bucket(vec_col, n_planes: int = 12, dim: int = 64,
-                      seed: int = 42, *, _once: bool = False):
+                      seed: int = 42):
     """Random-hyperplane LSH bucket id: sign-bit pattern of `n_planes`
-    projections (Charikar cosine LSH).
+    projections (Charikar cosine LSH)."""
+    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
+    return _hyperplane_kernel(n_planes, dim, seed)(col)
 
-    ``_once`` (internal): nondeterministic marking for the §4.4
-    single-eval shape — a caller that equi-joins on the bucket column
-    gets an inferred isnotnull filter pushed below the projection,
-    duplicating the projection matmul over its whole input (see
-    lsh_ann_topk's corpus side).  Same kernel, bit-identical values."""
+
+def _hyperplane_kernel(n_planes: int, dim: int, seed: int = 42):
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
 
     powers = 1 << np.arange(n_planes, dtype=np.int64)
 
     @lazy_pandas_udf("long")
-    def udf(v: pd.Series) -> pd.Series:
+    def _lsh_bucket_udf(v: pd.Series) -> pd.Series:
         vals = v.values
         out = np.empty(len(vals), dtype=object)
         nz = [i for i, arr in enumerate(vals) if arr is not None]
@@ -238,12 +237,7 @@ def hyperplane_bucket(vec_col, n_planes: int = 12, dim: int = 64,
                 out[i] = int(codes[t])
         return pd.Series(out, dtype=object)
 
-    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    if _once:
-        from pyspark.sql.functions import pandas_udf
-
-        return pandas_udf("long")(udf.fn).asNondeterministic()(col)
-    return udf(col)
+    return _lsh_bucket_udf
 
 
 def _train_unit_centroids(corpus: DataFrame, vec_col: str, n_lists: int,
@@ -335,9 +329,9 @@ def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                                       sample_size, seed, corpus_rows,
                                       caller="ivf_ann_topk")
 
-    def _list_udf(top_n: int, once: bool = False):
+    def _list_udf(top_n: int):
         @lazy_pandas_udf("array<int>")
-        def udf(v: pd.Series) -> pd.Series:
+        def _ivf_list_udf(v: pd.Series) -> pd.Series:
             vals = v.values
             out = np.empty(len(vals), dtype=object)
             nz = [i for i, arr in enumerate(vals) if arr is not None]
@@ -350,21 +344,17 @@ def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 for t, i in enumerate(nz):
                     out[i] = order[t]
             return pd.Series(out, dtype=object)
-        if once:
-            from pyspark.sql.functions import pandas_udf
+        return _ivf_list_udf
 
-            return pandas_udf("array<int>")(udf.fn).asNondeterministic()
-        return udf
-
-    # once=True on the corpus side (r15, §4.4): the equi-join on
-    # __list lets Catalyst infer isnotnull(__list) and push it below
-    # this projection, duplicating the eval — the centroid-assignment
-    # matmul ran TWICE over the whole corpus (plan-verified: two
-    # ArrowEvalPython sites with the same UDF call id).  Values
-    # bit-identical; null-list rows drop in the equi-join either way.
+    # .once on the corpus side: the equi-join on __list lets Catalyst
+    # infer isnotnull(__list) and push it below this projection,
+    # duplicating the eval — the centroid-assignment matmul ran TWICE
+    # over the whole corpus (plan-verified: two ArrowEvalPython sites
+    # with the same UDF call id).  Null-list rows drop in the equi-join
+    # either way.
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv"),
-        F.element_at(_list_udf(1, once=True)(F.col(vec_col)), 1).alias("__list"),
+        F.element_at(_list_udf(1).once(F.col(vec_col)), 1).alias("__list"),
     )
     q = queries.select(
         F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qv"),
@@ -394,12 +384,12 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     is untouched, so this raises recall at candidate-join cost only, the
     standard multiprobe-LSH trade).
     """
-    # _once on the corpus side (r15, §4.4): the bucket equi-join's
-    # inferred isnotnull otherwise duplicates the projection matmul
-    # over the whole corpus (see hyperplane_bucket docstring)
+    # .once on the corpus side: the bucket equi-join's inferred
+    # isnotnull otherwise duplicates the projection matmul over the
+    # whole corpus
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv"),
-        hyperplane_bucket(vec_col, n_planes, dim, _once=True)
+        _hyperplane_kernel(n_planes, dim).once(F.col(vec_col))
         .alias("__bucket"),
     )
     q = queries.select(

@@ -9,6 +9,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from rasterframes_spark._plan import (
+    NARROW_NODES, RELATION_LEAVES, footer_row_count, optimized_plan,
+    plan_leaves, row_count_stat)
+
 __all__ = ["salted_agg", "salted_count", "spread"]
 
 
@@ -46,18 +50,7 @@ def salted_count(df: DataFrame, group_cols: list, salt_buckets: int = 16) -> Dat
     return salted_agg(df, group_cols, {"n": ("*", "count")}, salt_buckets)
 
 
-# Row-preserving unary nodes: a plan made only of these over relation
-# leaves has AT MOST as many rows as its leaves, so the leaf row count
-# is a valid upper bound for sizing.  Generate (explode), joins,
-# aggregates and Python-eval nodes can multiply rows — disqualified.
-_ROW_PRESERVING = frozenset({
-    "Project", "Filter", "SubqueryAlias", "Sort",
-    "Repartition", "RepartitionByExpression"})
-_ROW_LEAVES = frozenset({
-    "LogicalRelation", "Relation", "InMemoryRelation", "LocalRelation"})
-
-
-def _scan_row_bound(df: DataFrame, max_files: int = 64) -> int | None:
+def _scan_row_bound(df: DataFrame) -> int | None:
     """Free upper bound on ``df``'s row count — driver-side only, NO
     Spark jobs (r15, VERDICT r14 #2: sizing the spread with an eager
     count would cost more than the mis-sized shuffle it prevents).
@@ -66,40 +59,26 @@ def _scan_row_bound(df: DataFrame, max_files: int = 64) -> int | None:
     (scans, materialized caches, local data).  Prefers Catalyst's
     ``rowCount`` statistic (exact for materialized caches), else sums
     parquet footer row counts over ``df.inputFiles()`` (~ms of driver
-    IO for small file sets; capped at ``max_files`` because a corpus
-    with that many files scans as that many partitions anyway and the
-    spread no-ops before sizing matters).  Returns None when no bound
-    is derivable — callers fall back to the defaultParallelism cap."""
+    IO for small file sets; see ``FOOTER_MAX_FILES``).  Returns None
+    when no bound is derivable — callers fall back to the
+    defaultParallelism cap."""
     try:
-        jp = df._jdf.queryExecution().optimizedPlan()
-        stack = [jp]
-        while stack:
-            node = stack.pop()
-            name = node.nodeName()
-            if name in _ROW_LEAVES:
-                continue
-            if name not in _ROW_PRESERVING:
-                return None
-            ch = node.children()
-            stack.extend(ch.apply(i) for i in range(ch.size()))
-        rc = jp.stats().rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-        files = df.inputFiles()
-        if not files or len(files) > max_files or \
-                not all(f.endswith(".parquet") for f in files):
+        jp = optimized_plan(df)
+        # narrow nodes over relation leaves yield AT MOST as many rows as
+        # the leaves; Generate (explode), joins, aggregates and
+        # Python-eval nodes can multiply rows — disqualified
+        if plan_leaves(jp, NARROW_NODES, RELATION_LEAVES) is None:
             return None
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(f.removeprefix("file:")).metadata.num_rows
-            for f in files)
+        rc = row_count_stat(jp)
+        return rc if rc is not None else footer_row_count(df)
     except Exception:  # noqa: BLE001 — estimate only; None = unknown
         return None
 
 
-_ROW_EXACT = frozenset({"Project", "SubqueryAlias", "Sort",
-                        "Repartition", "RepartitionByExpression"})
+# Exact row preservation: Filter drops rows, and only file scans have
+# footers to sum.
+_ROW_EXACT = NARROW_NODES - {"Filter"}
+_FILE_LEAVES = frozenset({"LogicalRelation", "Relation"})
 
 
 def _scan_row_count_exact(df: DataFrame) -> int | None:
@@ -112,29 +91,13 @@ def _scan_row_count_exact(df: DataFrame) -> int | None:
     count exactly — unlike :func:`_scan_row_bound`, Filter disqualifies
     (a filtered scan's rows are not the footer rows)."""
     try:
-        jp = df._jdf.queryExecution().optimizedPlan()
-        rc = jp.stats().rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-        stack = [jp]
-        while stack:
-            node = stack.pop()
-            name = node.nodeName()
-            if name in ("LogicalRelation", "Relation"):
-                continue
-            if name not in _ROW_EXACT:
-                return None
-            ch = node.children()
-            stack.extend(ch.apply(i) for i in range(ch.size()))
-        files = df.inputFiles()
-        if not files or len(files) > 64 or \
-                not all(f.endswith(".parquet") for f in files):
+        jp = optimized_plan(df)
+        rc = row_count_stat(jp)
+        if rc is not None:
+            return rc
+        if plan_leaves(jp, _ROW_EXACT, _FILE_LEAVES) is None:
             return None
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(f.removeprefix("file:")).metadata.num_rows
-            for f in files)
+        return footer_row_count(df)
     except Exception:  # noqa: BLE001 — estimate only; None = unknown
         return None
 

@@ -442,10 +442,10 @@ def streaming_neardup(stream: DataFrame, id_col: str = "doc_id",
             f"({num_perm}) — a remainder would silently drop trailing "
             "minhash values from banding and degrade recall")
     id_type = stream.schema[id_col].dataType.simpleString()
-    # (r15: checked for the §4.4 duplicated-eval shape that hit
+    # (checked for the duplicated-eval shape that hit
     # minhash_dedup_pairs — the micro-batch plan evaluates this kernel
     # ONCE already (no spread exchange for the filter to push through),
-    # so the _once marking is deliberately NOT used here)
+    # so the kernel's ``.once`` form is deliberately NOT used here)
     sig = minhash_signature_text(text_col, shingle_size, num_perm)
     rows_per_band = num_perm // bands
     banded = (stream

@@ -95,20 +95,33 @@ def test_minhash_pipeline_single_kernel_evals(spark, docs):
     projections and the optimizer duplicates both kernels (the
     signature duplicate additionally ran BELOW the spread Exchange).
     Also pins: the signature eval sits above the spread exchange, and
-    results are identical to a threshold-free recompute."""
+    results are identical to a threshold-free recompute.
+    dedup_against_minhash runs the same two kernels: one signature eval
+    per corpus side, one verify eval."""
     import re
 
     both = docs.select("doc_id", "text").limit(30)
     pairs = P.minhash_dedup_pairs(both, "doc_id", "text", shingle_size=3,
                                   num_perm=32, bands=16, threshold=0.5)
+    # scan-rooted: a limit() below the signature projection hides the
+    # duplication this pins
+    against = P.dedup_against_minhash(docs, docs, "doc_id", "text")
+    # (frame, signature input, jaccard inputs, signature evals)
+    cases = [(pairs, r"__txt#\d+", r"__ta#\d+, __tb#\d+", 1),
+             (against, r"text#\d+", r"\w+#\d+, \w+#\d+", 2)]
+    for df, sig_in, jac_in, n_sig in cases:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # distinct eval sites = distinct (result, python output) expr-ids
+        # per udf signature: a cached sub-plan prints once per reader,
+        # and a pushed-down duplicate keeps the result id
+        site = r"\)(#\d+)\], \[pythonUDF\d+(#\d+)"
+        sig_evals = set(re.findall(
+            rf"ArrowEvalPython \[udf\({sig_in}{site}", plan))
+        jac_evals = set(re.findall(
+            rf"ArrowEvalPython \[udf\({jac_in}{site}", plan))
+        assert len(sig_evals) == n_sig, plan
+        assert len(jac_evals) == 1, plan
     plan = pairs._jdf.queryExecution().executedPlan().toString()
-    # distinct eval sites = distinct result expr-ids per udf signature
-    sig_evals = set(re.findall(r"ArrowEvalPython \[udf\(__txt#\d+\)(#\d+)",
-                               plan))
-    jac_evals = set(re.findall(
-        r"ArrowEvalPython \[udf\(__ta#\d+, __tb#\d+\)(#\d+)", plan))
-    assert len(sig_evals) == 1, plan
-    assert len(jac_evals) == 1, plan
     # the signature eval consumes the spread (round-robin) exchange
     # output, not the raw scan: its input column is the post-exchange
     # __txt and an Exchange RoundRobinPartitioning exists below it
@@ -1299,18 +1312,17 @@ def test_ann_corpus_kernels_single_eval(spark, emb):
     pushes below the projection and duplicates the matmul.  Plan-
     asserted per operator; semantic_dedup results pinned against the
     same call's kept-count invariants."""
-    import re
-
     q = emb.limit(4).select(F.col("vec_id").alias("query_id"), "embedding")
     cents = np.eye(8, 64)
 
+    # one eval per side: the corpus (single-eval form) and the queries
     ivf = P.ivf_ann_topk(emb, q, k=5, n_lists=8, n_probe=2, centroids=cents)
     plan = ivf._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"ArrowEvalPython \[", plan)) == 2, plan
+    assert plan.count("_ivf_list_udf") == 2, plan
 
     lsh = P.lsh_ann_topk(emb, q, k=5, n_planes=4, dim=64)
     plan = lsh._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"ArrowEvalPython \[", plan)) == 2, plan
+    assert plan.count("_lsh_bucket_udf") == 2, plan
 
     sd = P.semantic_dedup(emb, "vec_id", n_clusters=8, threshold=0.97,
                           pairs_method="blas", centroids=cents)
